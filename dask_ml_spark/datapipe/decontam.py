@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_ml_spark.datapipe.dedup import shingles_from_tokens, tokens_expr
+from dask_ml_spark.utils import cut
 
 
 def contamination_scores(docs: DataFrame, eval_docs: DataFrame,
@@ -40,10 +41,10 @@ def contamination_scores(docs: DataFrame, eval_docs: DataFrame,
         .distinct()
     )
     # doc_sh is scanned twice (sizes + overlap) but is CORPUS-scale, so
-    # no pin: persist() leaks the session CacheManager entry and
-    # localCheckpoint would eagerly materialize the whole corpus's
-    # shingles on executors. It is a pure narrow map+explode — the
-    # second consumer re-runs one narrow scan. The eval set broadcasts.
+    # no cut: persist() leaks the session CacheManager entry and a cut
+    # would materialize the whole corpus's shingles on executors. It is
+    # a pure narrow map+explode — the second consumer re-runs one
+    # narrow scan. The eval set broadcasts.
     sizes = doc_sh.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
     overlap = (
         doc_sh.join(F.broadcast(eval_sh), "shingle")
@@ -98,15 +99,11 @@ def contamination_scores_bloom(docs: DataFrame, eval_docs: DataFrame,
     the exact join, never a wrong answer, so the output is
     deterministic and shares the exact path's oracle verbatim.
     """
-    eval_sh = (
+    eval_sh = cut(
         eval_docs.select(tokens_expr(F.col(text_col)).alias("__toks"))
         .select(F.explode(shingles_from_tokens(F.col("__toks"), shingle_n))
                 .alias("shingle"))
         .distinct()
-        # localCheckpoint, not persist: a persist inside a library call
-        # leaks executor storage for the session (the ContextCleaner
-        # reclaims checkpoints once unreferenced)
-        .localCheckpoint(eager=False)
     )
     n_items = max(eval_sh.count(), 1)
     m = max(64, n_items * bits_per_item)

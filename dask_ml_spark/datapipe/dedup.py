@@ -18,7 +18,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dask_ml_spark.utils import ensure_min_partitions
+from dask_ml_spark.utils import cut, ensure_min_partitions
 
 TOKEN_RE = "[a-z0-9_]{2,}"
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
@@ -54,13 +54,6 @@ def _exploded_shingles(df: DataFrame, text_col: str, id_col: str, n: int):
         .select(F.col(id_col),
                 F.explode(shingles_from_tokens(F.col("__toks"), n)).alias("shingle"))
     )
-
-
-def shingles_expr(text_col, n: int = 3):
-    """Word n-gram shingles as an array<string> (distinct).  Prefer
-    shingles_from_tokens over a projected token column in hot paths —
-    see that docstring for why."""
-    return shingles_from_tokens(tokens_expr(text_col), n)
 
 
 def base_hash_expr(col):
@@ -257,30 +250,24 @@ def remove_repeated_spans(df: DataFrame, text_col: str = "text",
     # re-ran the regexp tokenizer over the full text (3 evaluations
     # measured in the old plan). The NULL-text filter preserves the
     # old shape's semantics (such rows appeared in no output branch).
-    base = (ensure_min_partitions(df)
-            .select(F.col(id_col), tokens_expr(F.col(text_col)).alias("__toks"))
-            .where(F.col("__toks").isNotNull())
-            .localCheckpoint(eager=False))
+    base = cut(ensure_min_partitions(df)
+               .select(F.col(id_col), tokens_expr(F.col(text_col)).alias("__toks"))
+               .where(F.col("__toks").isNotNull()))
     # 1-based window start positions; guarded so sequence() never sees
     # start > stop (Spark would count DOWN, not return empty)
     starts = F.when(
         F.size(t) >= span_tokens,
         F.sequence(F.lit(1), F.size(t) - span_tokens + 1)
     ).otherwise(F.array().cast("array<int>"))
-    wins = (base.select(
+    # consumed twice (occurrence agg + join back)
+    wins = cut(base.select(
         F.col(id_col),
         F.explode(F.transform(starts, lambda p: F.struct(
             (p - 1).alias("pos"),
             F.md5(F.array_join(F.slice(t, p, span_tokens), " ")).alias("h"))))
         .alias("__w"))
         .select(F.col(id_col), F.col("__w.pos").alias("pos"),
-                F.col("__w.h").alias("h"))
-        # consumed twice (occurrence agg + join back); localCheckpoint,
-        # not persist, so the ContextCleaner reclaims the blocks; LAZY —
-        # it materializes inside the query's own first stage instead of
-        # costing an extra build-time job (eager was measured as one
-        # whole extra pass at construction)
-        .localCheckpoint(eager=False))
+                F.col("__w.h").alias("h")))
     dup = (wins.groupBy("h")
            .agg(F.count("*").alias("__occ"),
                 F.min(F.struct(F.col(id_col), F.col("pos"))).alias("__first"))
@@ -358,21 +345,11 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
         F.concat_ws("_", *[F.col(f"m{bi * r + j}").cast("string") for j in range(r)])
         for bi in range(bands)
     ])
-    # localCheckpoint(eager=False), NOT persist: the self-join plans
-    # one side as a broadcast, so exchange reuse cannot share the
-    # signature aggregation between sides — pinning makes it compute
-    # once. A library-level persist() registers in the session
-    # CacheManager and leaks until someone calls unpersist()/
-    # clearCache(); checkpoint RDD blocks are reclaimed by the
-    # ContextCleaner once the result frame is dropped. Lazy, so the
-    # signatures materialize inside the main query (an eager
-    # checkpoint runs a separate job per call — measured 2x slower).
-    # Fault-tolerance trade: checkpoint blocks are UNREPLICATED and
-    # lineage is truncated, so an executor loss after materialization
-    # fails the query instead of recomputing the partition — on a
-    # long multi-hour cluster job, retries must restart the query (or
-    # swap in checkpoint() to reliable storage).
-    banded = sig.localCheckpoint(eager=False).select(
+    # cut: the self-join plans one side as a broadcast, so exchange
+    # reuse cannot share the signature aggregation between sides —
+    # the cut makes it compute once (an eager checkpoint runs a
+    # separate job per call — measured 2x slower)
+    banded = cut(sig).select(
         F.col(id_col), F.posexplode(band_arr).alias("band", "band_key")
     )
     left = banded.alias("l")
@@ -426,10 +403,9 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc
         F.pmod(F.shiftright(F.col("simhash"), blk * bits_per), F.lit(int(2**bits_per)))
         for blk in range(n_blocks)
     ])
-    # lazy localCheckpoint of the 1-row-per-doc fingerprints (see the
-    # minhash_lsh_pairs note — persist would leak the CacheManager
-    # entry for the session); the block explode re-derives per side.
-    blocks = fps.localCheckpoint(eager=False).select(
+    # cut the 1-row-per-doc fingerprints (see minhash_lsh_pairs); the
+    # block explode re-derives per side.
+    blocks = cut(fps).select(
         F.col(id_col), F.col("simhash"), F.posexplode(block_arr).alias("blk", "blk_val")
     )
     l, r = blocks.alias("l"), blocks.alias("r")
@@ -464,8 +440,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     rely on AQE skew handling. Output: (id_a, id_b, jaccard)."""
     # No pin: the exploded shingles are CORPUS-scale (one row per
     # shingle occurrence), so neither persist (session CacheManager
-    # leak) nor localCheckpoint (eager executor materialization of the
-    # whole corpus) is safe in a library call. The frame is a pure
+    # leak) nor a cut (executor materialization of the whole corpus)
+    # is safe in a library call. The frame is a pure
     # narrow map+explode; the two join sides share an identical
     # shuffle-on-shingle subplan that exchange reuse evaluates once,
     # and the sizes aggregate re-runs one narrow scan.
@@ -700,31 +676,26 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     constant. local_edges=0 disables the local phase (pure
     distributed, e.g. for tests of the loop itself).
     """
-    # localCheckpoint (not persist): each round's plan nests two
-    # joins + three exchanges on top of the last, so lineage grows
-    # exponentially across O(log² n) rounds — truncating it per round
-    # is what keeps the optimizer's work O(1) per round. LAZY
-    # (eager=False): the signature aggregate right below is the first
-    # action anyway, so it materializes the checkpoint in the SAME job
-    # — an eager checkpoint would run one extra job per round (measured
-    # ~2x the job count on small fixed inputs where scheduling, not
-    # data, is the cost). Fault-tolerance note: checkpoint blocks are
-    # unreplicated and lineage is truncated, so losing an executor
-    # mid-loop fails the job instead of recomputing the partition — on
-    # a real cluster swap in checkpoint() to a reliable store if
-    # executor loss during the loop must be survivable.
-    edges = (pairs.select(F.col(id_a).cast("long").alias("src"),
-                          F.col(id_b).cast("long").alias("dst"))
-             .where(F.col("src") != F.col("dst"))
-             .distinct().localCheckpoint(eager=False))
+    # cut per round: each round's plan nests two joins + three
+    # exchanges on top of the last, so lineage grows exponentially
+    # across O(log² n) rounds — truncating it per round is what keeps
+    # the optimizer's work O(1) per round. The signature aggregate
+    # right below is the first action anyway, so it materializes the
+    # lazy cut in the SAME job (an eager checkpoint was measured at ~2x
+    # the job count on small fixed inputs). On a real cluster swap in
+    # checkpoint() to a reliable store if executor loss during the
+    # loop must be survivable.
+    edges = cut(pairs.select(F.col(id_a).cast("long").alias("src"),
+                             F.col(id_b).cast("long").alias("dst"))
+                .where(F.col("src") != F.col("dst"))
+                .distinct())
     sig = edges.agg(
         F.count("*").alias("n"),
         F.coalesce(_xor_agg(), F.lit(0)).alias("h")).first()
     for _ in range(max_iter):
         if sig["n"] <= local_edges:
             return _components_local(edges)
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(
-            eager=False)
+        new_edges = cut(_small_star(_large_star(edges)))
         new_sig = new_edges.agg(
             F.count("*").alias("n"),
             F.coalesce(_xor_agg(), F.lit(0)).alias("h")).first()
@@ -809,7 +780,8 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
 
     Returns (node, cluster): one row per document that appears in any
     pair. Singletons (no pair) are their own cluster by definition and
-    are not materialized.
+    are not materialized. A NULL id gets no row; a document paired
+    only with NULLs is its own cluster.
 
     method="star" dispatches to `connected_components_star` (same
     contract, O(log² n) rounds independent of diameter) — prefer it
@@ -831,21 +803,24 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
                                          local_edges=local_edges)
     if method != "label":
         raise ValueError(f"method must be 'label' or 'star', got {method!r}")
-    # lazy localCheckpoint, not persist: sym is referenced every round,
-    # and a library persist() leaks its CacheManager entry for the
-    # session (checkpoint blocks are ContextCleaner-reclaimed once
-    # dropped). Edge tables are candidate-pair scale — far below
-    # corpus scale; lazy so it materializes with round 1's job.
+    # cut: sym is referenced every round; edge tables are
+    # candidate-pair scale — far below corpus scale.
     # symmetrize with ONE in-row explode, not a unionAll of two selects:
     # the union duplicates the entire upstream pair plan (hashing +
     # candidate join run twice per materialization — measured on the
-    # image dedup path), while the generator reads each pair once
-    sym = (pairs.select(F.explode(F.array(
-               F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-               F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
-           .alias("__e"))
-           .select("__e.src", "__e.dst")
-           .distinct().localCheckpoint(eager=False))
+    # image dedup path), while the generator reads each pair once.
+    # A NULL id is no document: the pair's non-null id stays as a
+    # self-edge (its own singleton cluster) and the NULL endpoint is
+    # dropped, so both sides of the local_edges gate see the same
+    # edges (union-find cannot take NULL ids)
+    a, b = F.col(id_a), F.col(id_b)
+    sym = cut(pairs.select(F.explode(F.array(
+                  F.struct(a.alias("src"), F.coalesce(b, a).alias("dst")),
+                  F.struct(b.alias("src"), F.coalesce(a, b).alias("dst"))))
+              .alias("__e"))
+              .select("__e.src", "__e.dst")
+              .where(F.col("src").isNotNull())
+              .distinct())
     from pyspark.sql import types as T
 
     if local_edges and isinstance(sym.schema["src"].dataType, T.LongType):
@@ -854,35 +829,26 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
         # branch costs one scalar aggregate over cached blocks. sym
         # holds BOTH orientations (~2x the oriented distinct pairs the
         # star path gates on), so the bound doubles to admit the same
-        # graphs; null-id rows — which the distributed joins silently
-        # tolerate — are dropped before the local finish (int(NaN)
-        # raises in union-find)
+        # graphs
         if sym.count() <= 2 * local_edges:
-            return _components_local(sym.where(
-                F.col("src").isNotNull() & F.col("dst").isNotNull()))
-    # localCheckpoint, not persist: each round references `labels`
-    # TWICE (neighbor join + left join), so without lineage truncation
-    # the logical plan DOUBLES per round — exponential in rounds, and a
+            return _components_local(sym)
+    # cut per round: each round references `labels` TWICE (neighbor
+    # join + left join), so without lineage truncation the logical
+    # plan DOUBLES per round — exponential in rounds, and a
     # diameter-10 component already OOMs the driver on plan strings.
-    # Truncation keeps optimizer work O(1) per round; caching comes
-    # with it. LAZY: the label-sum aggregate below is the first action
-    # and materializes the checkpoint in the same job (an eager
-    # checkpoint would double the per-round job count). Same
-    # fault-tolerance trade as connected_components_star: executor
-    # loss mid-loop fails the job — use checkpoint() to reliable
-    # storage on a real cluster if that must be survivable.
-    labels = (sym.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint(eager=False))
+    # The label-sum aggregate below is the first action and
+    # materializes the lazy cut in the same job. Same fault-tolerance
+    # trade as connected_components_star.
+    labels = cut(sym.select(F.col("src").alias("node")).distinct()
+                 .withColumn("label", F.col("node")))
     prev_sum = labels.agg(F.sum("label")).first()[0]
     for _ in range(max_iter):
         neigh = (sym.join(labels, sym.src == labels.node)
                  .groupBy(F.col("dst").alias("node"))
                  .agg(F.min("label").alias("nmin")))
-        new_labels = (labels.join(neigh, "node", "left")
-                      .select("node", F.least("label", F.coalesce("nmin", "label"))
-                              .alias("label"))
-                      .localCheckpoint(eager=False))
+        new_labels = cut(labels.join(neigh, "node", "left")
+                         .select("node", F.least("label", F.coalesce("nmin", "label"))
+                                 .alias("label")))
         new_sum = new_labels.agg(F.sum("label")).first()[0]
         labels.unpersist()
         labels = new_labels

@@ -4,7 +4,7 @@ score over the outlink/co-link graph decides which domains' text is
 kept at higher rates).
 
 Spark-first shape: the edge table is degree-normalized ONCE and
-localCheckpointed; every PageRank iteration is then one equi join
+cut; every PageRank iteration is then one equi join
 (ranks x edges on src) plus one groupBy(dst) aggregate — a single
 shuffle per iteration, with rank state bounded by #nodes rows.
 Dangling mass (nodes with no out-edges) is redistributed uniformly,
@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import cut
+
 
 def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
              src_col: str = "src", dst_col: str = "dst",
@@ -28,27 +30,24 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
     """
     w = (F.col(weight_col).cast("double") if weight_col
          else F.lit(1.0))
-    # e feeds nodes/deg/norm — lazily checkpointed so the edge
-    # aggregation (and the possibly-expensive upstream edge extraction)
+    # e feeds nodes/deg/norm — cut so the edge aggregation (and the
+    # possibly-expensive upstream edge extraction)
     # evaluates once, not once per reference; nodes symmetrize with one
     # in-row explode instead of a unionAll that doubled the subtree
-    e = (edges.select(F.col(src_col).alias("src"),
-                      F.col(dst_col).alias("dst"), w.alias("w"))
-         .groupBy("src", "dst").agg(F.sum("w").alias("w"))
-         .localCheckpoint(eager=False))
-    nodes = (e.select(F.explode(F.array(F.col("src"), F.col("dst")))
-                      .alias("node"))
-             .distinct().localCheckpoint(eager=False))
+    e = cut(edges.select(F.col(src_col).alias("src"),
+                         F.col(dst_col).alias("dst"), w.alias("w"))
+            .groupBy("src", "dst").agg(F.sum("w").alias("w")))
+    nodes = cut(e.select(F.explode(F.array(F.col("src"), F.col("dst")))
+                         .alias("node"))
+                .distinct())
     n = nodes.count()
     deg = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     # out-degree-normalized edges, built once and reused every iteration
-    norm = (e.join(deg, "src")
-            .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-            .localCheckpoint(eager=False))
+    norm = cut(e.join(deg, "src")
+               .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p")))
     # the dangling-node SET is static — computed once, not per iteration
-    dangling_nodes = (nodes.join(norm.select(F.col("src").alias("node")),
-                                 "node", "left_anti")
-                      .localCheckpoint(eager=False))
+    dangling_nodes = cut(nodes.join(norm.select(F.col("src").alias("node")),
+                                    "node", "left_anti"))
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     base = (1.0 - damping) / n
     for i in range(iters):
@@ -92,7 +91,7 @@ def smooth_scores(edges: DataFrame, scores: DataFrame,
     Shape at 100 TB: per iteration ONE equi join (edges x scores on
     dst — uniform key) and one groupBy(src) aggregate (bounded by the
     graph's out-degree, k for a k-NN graph — no hot groups), plus a
-    left join back. Edge table localCheckpointed once when several
+    left join back. Edge table cut once when several
     rounds will reuse it; score state is #nodes rows. Deterministic —
     SQL-replayable.
 
@@ -105,15 +104,14 @@ def smooth_scores(edges: DataFrame, scores: DataFrame,
     e = (edges.select(F.col(src_col).alias("__src"),
                       F.col(dst_col).alias("__dst")))
     if iters > 1:
-        # lazy localCheckpoint: the (possibly expensive, e.g.
-        # knn_graph) edge table materializes with the first smoothing
-        # round's job and LATER rounds reuse the blocks. With a single
-        # round the edge plan has exactly one consumer — a checkpoint
-        # there buys no reuse and still pays both its build-time
-        # physical planning (localCheckpoint plans the subtree via
-        # toRdd even with eager=False) and a full executor-side block
-        # materialization of the edge table at any scale.
-        e = e.localCheckpoint(eager=False)
+        # cut: the (possibly expensive, e.g. knn_graph) edge table
+        # materializes with the first smoothing round's job and LATER
+        # rounds reuse the blocks. With a single round the edge plan
+        # has exactly one consumer — a cut there buys no reuse and
+        # still pays both its build-time physical planning (the lazy
+        # checkpoint plans the subtree via toRdd) and a full
+        # executor-side block materialization of the edge table.
+        e = cut(e)
     for i in range(iters):
         nb = (e.join(cur.select(F.col(id_col).alias("__dst"), "__s"), "__dst")
               .groupBy("__src").agg(F.avg("__s").alias("__nb")))
@@ -128,11 +126,11 @@ def smooth_scores(edges: DataFrame, scores: DataFrame,
             # plan one-iteration deep instead of stacking every
             # round's joins, and the next round reads cur twice (the
             # nb join + the join back). The LAST round's state has no
-            # next round — its checkpoint served only callers that
-            # consume the returned frame more than once, at the price
-            # of materializing the result an extra time; such callers
-            # checkpoint at the call site instead.
-            cur = cur.localCheckpoint(eager=False)
+            # next round — its cut served only callers that consume
+            # the returned frame more than once, at the price of
+            # materializing the result an extra time; such callers cut
+            # at the call site instead.
+            cur = cut(cur)
     return cur.select(F.col(id_col), F.col("__s").alias(score_col))
 
 
@@ -157,14 +155,13 @@ def triangle_count(edges: DataFrame, src_col: str = "src",
     counts are one explode + groupBy.
     """
     a, b = F.col(src_col), F.col(dst_col)
-    # und feeds the degree count AND the orientation join — lazily
-    # checkpointed so the distinct (and upstream edge derivation)
-    # evaluates once; the degree union is one in-row explode
-    und = (edges
-           .where(a != b)
-           .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-           .distinct()
-           .localCheckpoint(eager=False))
+    # und feeds the degree count AND the orientation join — cut so the
+    # distinct (and upstream edge derivation) evaluates once; the
+    # degree union is one in-row explode
+    und = cut(edges
+              .where(a != b)
+              .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+              .distinct())
     deg = (und.select(F.explode(F.array(F.col("u"), F.col("v")))
                       .alias("node"))
            .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
@@ -185,14 +182,10 @@ def triangle_count(edges: DataFrame, src_col: str = "src",
                 .select(F.col("e.s").alias("s"), F.col("e.t").alias("t")))
     sc = edges.sparkSession.sparkContext
     n_parts = max(sc.defaultParallelism, 1)
-    # lazy localCheckpoint: consumed three times (2 wedge sides +
-    # closure); lineage is truncated, so an executor loss mid-query
-    # restarts the query rather than recomputing the partition — the
-    # documented trade for not leaking CacheManager entries (see
-    # dedup.duplicate_clusters)
-    oriented = oriented.repartition(n_parts).localCheckpoint(eager=False)
+    # cut: consumed three times (2 wedge sides + closure)
+    oriented = cut(oriented.repartition(n_parts))
     # the wedge join EXPLODES (sum of C(outdeg, 2) rows from a small
-    # edge input), and the checkpoint erased any partitioning info —
+    # edge input), and the cut erased any partitioning info —
     # so both join inputs carry their own EXPLICIT keyed repartition
     # (AQE-exempt): sized by key count, not by the small input bytes
     # AQE would otherwise coalesce into a handful of exploding tasks

@@ -35,7 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dask_ml_spark.utils import ensure_min_partitions
+from dask_ml_spark.utils import cut, ensure_min_partitions
 
 # dHash geometry: 8 rows x 9 columns -> 8x8 = 64 comparison bits,
 # packed row-major into 4 bands of 16 bits (2 rows per band)
@@ -221,8 +221,8 @@ def banded_hamming_pairs(hashes: DataFrame, id_col: str,
     # materialization the (expensive) fingerprint expression computes
     # once per side — twice more when the planner broadcasts a side,
     # where no exchange reuse can fire. One 5-column row per item (the
-    # 64-bit-per-image footprint), lazy, ContextCleaner-reclaimed.
-    hashes = hashes.localCheckpoint(eager=False)
+    # 64-bit-per-image footprint).
+    hashes = cut(hashes)
     entries = F.array(*[
         F.struct(F.lit(i).alias("band"), F.col(f"h{i}").alias("val"))
         for i in range(N_BANDS)])

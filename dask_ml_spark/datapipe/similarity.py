@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_ml_spark.functions.vector import cosine_similarity, dot, norm2
+from dask_ml_spark.utils import cut
 
 
 def _dlit(v) -> str:
@@ -263,14 +264,12 @@ def knn_graph(df: DataFrame, k: int = 10,
     # old hard 32-partition floor only ever bound BELOW 32 cores, where
     # it over-split tiny bucket tables into 8x more tasks than cores)
     parts = df.sparkSession.sparkContext.defaultParallelism
-    # localCheckpoint after the keyed repartition: BOTH self-join sides
-    # read the materialized buckets (the Arrow bucketing UDF would
-    # otherwise run once per side — exchange reuse does not fire across
-    # the aliased subplans); checkpoint preserves the hash partitioning
-    # so the join still co-locates, and the ContextCleaner reclaims the
-    # blocks when the returned DataFrame is dropped
-    coded = coded.repartition(parts, F.col("band"),
-                              F.col("bucket")).localCheckpoint(eager=False)
+    # cut after the keyed repartition: BOTH self-join sides read the
+    # materialized buckets (the Arrow bucketing UDF would otherwise run
+    # once per side — exchange reuse does not fire across the aliased
+    # subplans); the cut preserves the hash partitioning so the join
+    # still co-locates
+    coded = cut(coded.repartition(parts, F.col("band"), F.col("bucket")))
     l, r = coded.alias("l"), coded.alias("r")
     cand = (l.join(r, (F.col("l.band") == F.col("r.band"))
                    & (F.col("l.bucket") == F.col("r.bucket"))

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import cut
+
 
 def _mg_summaries(df: DataFrame, col: str, capacity: int) -> DataFrame:
     """One capacity-bounded Misra-Gries counter set per partition via
@@ -81,7 +83,7 @@ def heavy_hitters(df: DataFrame, col: str, k: int = 20,
     Output: (value, freq) — the k most frequent, freq descending.
     """
     capacity = max(capacity, k)
-    summ = _mg_summaries(df, col, capacity).localCheckpoint(eager=False)
+    summ = cut(_mg_summaries(df, col, capacity))
     n_total = summ.where(F.col("value").isNull()) \
         .agg(F.sum("mg_count")).collect()[0][0] or 0
     cand = summ.where(F.col("value").isNotNull()).select("value").distinct()

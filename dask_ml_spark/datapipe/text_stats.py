@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_ml_spark.datapipe.dedup import tokens_expr
-from dask_ml_spark.utils import ensure_min_partitions
+from dask_ml_spark.utils import cut, ensure_min_partitions
 
 # Tiny per-language stopword lists for the n-gram/stopword-ratio
 # language heuristic. Deliberately short + ASCII so the same literals
@@ -409,17 +409,13 @@ def bm25_scores(df: DataFrame, query_terms, text_col: str = "text",
         F.col(id_col), tokens_expr(F.col(text_col)).alias("__toks"))
     base = base.select(id_col, "__toks", F.size("__toks").alias("dl"))
     stats = base.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-    # pin the postings: df-counts AND the scoring join both read tf,
-    # and without the pin Catalyst plans two full corpus scans for the
-    # same subtree. localCheckpoint, not persist — a bare persist
-    # leaks a cached dataset into executor storage for the session's
-    # lifetime; checkpoint blocks are reclaimed by the ContextCleaner
-    # once the returned DataFrame is dropped. The pinned frame is tiny
-    # — only (doc, matched-term) rows, bounded by n_docs * |query|.
-    tf = (base.select(id_col, "dl", F.explode("__toks").alias("term"))
-          .where(F.col("term").isin(terms))
-          .groupBy(id_col, "dl", "term").agg(F.count("*").alias("tf"))
-          .localCheckpoint(eager=False))
+    # cut the postings: df-counts AND the scoring join both read tf,
+    # and without the cut Catalyst plans two full corpus scans for the
+    # same subtree. The cut frame is tiny — only (doc, matched-term)
+    # rows, bounded by n_docs * |query|.
+    tf = cut(base.select(id_col, "dl", F.explode("__toks").alias("term"))
+             .where(F.col("term").isin(terms))
+             .groupBy(id_col, "dl", "term").agg(F.count("*").alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     denom = (F.col("tf")
@@ -452,11 +448,10 @@ def bm25_topk(df: DataFrame, queries: dict, k: int = 10,
         F.col(id_col), tokens_expr(F.col(text_col)).alias("__toks"))
     base = base.select(id_col, "__toks", F.size("__toks").alias("dl"))
     stats = base.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-    # localCheckpoint, same leak rationale as bm25_scores
-    tf = (base.select(id_col, "dl", F.explode("__toks").alias("term"))
-          .where(F.col("term").isin(all_terms))
-          .groupBy(id_col, "dl", "term").agg(F.count("*").alias("tf"))
-          .localCheckpoint(eager=False))
+    # cut, as in bm25_scores
+    tf = cut(base.select(id_col, "dl", F.explode("__toks").alias("term"))
+             .where(F.col("term").isin(all_terms))
+             .groupBy(id_col, "dl", "term").agg(F.count("*").alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     qdf = spark.createDataFrame(
         [(qid, t.lower()) for qid, ts in queries.items() for t in set(ts)],
@@ -490,13 +485,13 @@ def unigram_logprob_scores(df: DataFrame, text_col: str = "text",
     join beyond. Low scores = improbable token sequences (gibberish,
     boilerplate in the wrong corpus); use as a quality gate.
     """
-    # deliberately UNPINNED: the exploded token table is corpus-scale,
-    # so persist leaks session-lifetime cache and localCheckpoint
-    # materializes the whole thing to executor disk AND severs lineage
-    # (an executor loss then fails every downstream job). The explode
-    # is a narrow map over the scan — recomputing it for the second
-    # consumer costs one extra cheap scan and keeps the operator
-    # stateless; the tiny pinned frames in bm25_* stay checkpointed.
+    # deliberately UNCUT: the exploded token table is corpus-scale,
+    # so persist leaks session-lifetime cache and a cut materializes
+    # the whole thing to executor disk AND severs lineage (an executor
+    # loss then fails every downstream job). The explode is a narrow
+    # map over the scan — recomputing it for the second consumer costs
+    # one extra cheap scan and keeps the operator stateless; the tiny
+    # frames in bm25_* stay cut.
     toks = df.select(F.col(id_col), F.explode(
         tokens_expr(F.col(text_col))).alias("token"))
     lm = toks.groupBy("token").agg(F.count("*").alias("c"))
@@ -534,32 +529,23 @@ def bigram_logprob_scores(df: DataFrame, text_col: str = "text",
     BM25/unigram; no N², no driver data.
     """
     t = F.col("__toks")
-    # tokenize ONCE (lazy checkpoint): base feeds the bigram explode
-    # AND the unigram explode — unpinned it re-ran the regexp
-    # tokenizer per consumer
-    base = (ensure_min_partitions(df)
-            .select(F.col(id_col), tokens_expr(F.col(text_col)).alias("__toks"))
-            .localCheckpoint(eager=False))
+    # tokenize ONCE (cut): base feeds the bigram explode AND the
+    # unigram explode — uncut it re-ran the regexp tokenizer per
+    # consumer
+    base = cut(ensure_min_partitions(df)
+               .select(F.col(id_col), tokens_expr(F.col(text_col)).alias("__toks")))
     idx = F.when(F.size(t) >= 2, F.sequence(F.lit(1), F.size(t) - 1)
                  ).otherwise(F.array().cast("array<int>"))
-    grams = (base.select(
+    # grams is consumed twice (the bigram-count agg and the final join)
+    grams = cut(base.select(
         F.col(id_col),
         F.explode(F.transform(idx, lambda i: F.struct(
             F.element_at(t, i).alias("a"),
             F.element_at(t, i + 1).alias("b")))).alias("__g"))
-        .select(F.col(id_col), F.col("__g.a").alias("a"), F.col("__g.b").alias("b"))
-        # localCheckpoint, not persist: grams is consumed twice (the
-        # bigram-count agg and the final join), but a bare persist
-        # leaks a cached dataset into executor storage for the
-        # session's lifetime — checkpoint blocks are reclaimed by the
-        # ContextCleaner once the returned DataFrame is dropped. LAZY:
-        # it materializes inside the query's own job instead of as a
-        # blocking build-time pass
-        .localCheckpoint(eager=False))
+        .select(F.col(id_col), F.col("__g.a").alias("a"), F.col("__g.b").alias("b")))
     toks = base.select(F.col(id_col), F.explode(t).alias("token"))
-    # uni feeds the vocab scalar AND the count join — checkpoint once
-    uni = (toks.groupBy("token").agg(F.count("*").alias("ca"))
-           .localCheckpoint(eager=False))
+    # uni feeds the vocab scalar AND the count join — cut once
+    uni = cut(toks.groupBy("token").agg(F.count("*").alias("ca")))
     # vocab as a broadcast one-row aggregate, not a blocking .count()
     # action: V rides the query's own job. float(V) is exact and
     # lit(alpha) * V is the same single IEEE multiply the driver did

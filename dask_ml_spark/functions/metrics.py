@@ -19,14 +19,9 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import cut
+
 EPS = 1e-15
-
-
-def _w(col: Column, weight: Column | None) -> tuple[Column, Column]:
-    """Return (numerator, denominator) aggregates for a weighted mean."""
-    if weight is None:
-        return F.avg(col), None
-    return F.sum(weight * col), F.sum(weight)
 
 
 def _weighted_mean(col: Column, weight: Column | None) -> Column:
@@ -43,10 +38,6 @@ def accuracy_expr(y_true: Column, y_pred: Column, weight: Column | None = None) 
 
 def mse_expr(y_true: Column, y_pred: Column, weight: Column | None = None) -> Column:
     return _weighted_mean(F.pow(y_pred - y_true, 2), weight)
-
-
-def rmse_expr(y_true: Column, y_pred: Column, weight: Column | None = None) -> Column:
-    return F.sqrt(mse_expr(y_true, y_pred, weight))
 
 
 def mae_expr(y_true: Column, y_pred: Column, weight: Column | None = None) -> Column:
@@ -563,9 +554,9 @@ def roc_auc_score(df: DataFrame, label_col: str = "label",
     # bounded driver path (stats.py's kaplan/ks pattern): when the
     # distinct-score frame fits, cumsum driver-side — U is a sum of
     # integer products < 2^53, bit-identical to the prefix machine;
-    # the checkpoint lets the fallback reuse the materialized frame
+    # the cut lets the fallback reuse the materialized frame
     if max_driver_rows and max_driver_rows > 0:
-        g = g.localCheckpoint(eager=False)
+        g = cut(g)
         # Arrow probe, not a Row collect (the stats._bounded_head r13
         # optimization): non-null doubles only, value-identical
         head_pdf = g.limit(max_driver_rows + 1).toPandas()

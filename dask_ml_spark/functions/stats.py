@@ -66,7 +66,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dask_ml_spark.utils import ensure_min_partitions
+from dask_ml_spark.utils import cut, ensure_min_partitions
 
 SQRT_TWO_PI = 2.5066282746310002  # sqrt(2*pi), literal-folded
 
@@ -185,12 +185,12 @@ def _ad_p_py(a2: float) -> float:
 
 def _bounded_head(g: DataFrame, cap: int):
     """The bounded driver-path probe shared by every distinct-value
-    cumulative (ks/mwu/kaplan/spearman/roc_auc): localCheckpoint FIRST
-    so a fallback to the distributed prefix machinery reuses the
-    materialized frame instead of re-running the groupBy (blocks
-    reclaimed by the ContextCleaner), then one limit(cap+1) collect.
-    Returns (checkpointed g, head rows if they fit else None)."""
-    g = g.localCheckpoint(eager=False)
+    cumulative (ks/mwu/kaplan/spearman/roc_auc): cut FIRST so a
+    fallback to the distributed prefix machinery reuses the
+    materialized frame instead of re-running the groupBy, then one
+    limit(cap+1) collect. Returns (cut g, head rows if they fit else
+    None)."""
+    g = cut(g)
     # Arrow transfer instead of a Row collect (r13 optimization): the
     # probe moves up to cap+1 rows to the driver, and the pickled-Row
     # path pays ~10x Arrow's cost at the 65k cap. Values are plain
@@ -798,12 +798,12 @@ def benjamini_hochberg(df: DataFrame, p_col: str = "p_value",
     """
     if not 0.0 < alpha < 1.0:
         raise ValueError("alpha must be in (0, 1)")
-    # checkpoint the (bounded-by-contract) test family ONCE: the
-    # q-map collect and the join back must see the SAME p doubles —
+    # cut the (bounded-by-contract) test family ONCE: the q-map
+    # collect and the join back must see the SAME p doubles —
     # re-executing a sweep whose aggregates could re-associate between
     # jobs would make the eqNullSafe join silently miss (review-caught);
-    # lazy — the family collect below materializes it
-    df = df.localCheckpoint(eager=False)
+    # the family collect below materializes it
+    df = cut(df)
     pc = F.col(p_col).cast("double")
     fam = (df.where(pc.isNotNull() & ~F.isnan(pc))
            .groupBy(pc.alias("__p"))
@@ -1770,9 +1770,11 @@ def spearman_rho(df: DataFrame, col_a: str, col_b: str,
             for t in ("a", "b")}
     else:
         g = prefix_sum(g, "__v", "__c", "__before", group_col="__t")
-        ranked = g.select(
+        # cut: both rank frames below read ranked, so the grouped
+        # cumsum pass runs once instead of once per column
+        ranked = cut(g.select(
             "__t", "__v",
-            (F.col("__before") + (F.col("__c") + 1.0) / 2.0).alias("__r"))
+            (F.col("__before") + (F.col("__c") + 1.0) / 2.0).alias("__r")))
         rank_frames = {
             t: ranked.where(F.col("__t") == t)
                      .select(F.col("__v").alias(f"__{t}"),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_ml_spark.base import BaseEstimator, TransformerMixin
+from dask_ml_spark.utils import cut
 
 
 def _center_dists_expr(cols, centers, sqrt: bool = False):
@@ -331,8 +332,8 @@ class DBSCAN(BaseEstimator):
         base, pairs = _dbscan_pairs(df, cols, float(self.eps), id_col)
         # pairs carries BOTH directions of every neighbor pair, so one
         # groupBy counts each point's neighborhood (plus itself);
-        # lazy localCheckpoint: referenced three times downstream
-        pairs = pairs.localCheckpoint(eager=False)
+        # cut: referenced three times downstream
+        pairs = cut(pairs)
         if self.min_pts <= 1:
             # every point's neighborhood includes itself, so with
             # min_pts <= 1 EVERY point is core — including isolated

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import cut
+
 
 def _pairs_hof(arr):
     """All (a < b) combinations of a sorted array, via slices — cost
@@ -71,13 +73,11 @@ def _guarded_arrays(items: DataFrame, basket_col: str, item_col: str,
 
 def _frequency_levels(df: DataFrame, basket_col: str, item_col: str,
                       min_count: int, max_len: int,
-                      max_basket_items: int, f2_reused: bool = False):
+                      max_basket_items: int):
     """(f1, f2, f3, n_baskets_df) support tables; f3 None if max_len<3.
 
-    ``f2_reused``: the caller will consume f2 more than once (e.g.
-    association_rules reads it in both rule directions) — checkpoint it
-    so the pair aggregate runs once. At max_len=3 the triple level
-    already forces this."""
+    f2 comes back uncut at max_len=2: a caller that reads it more than
+    once (association_rules, both rule directions) cuts it itself."""
     if max_len not in (1, 2, 3):
         raise ValueError("max_len must be 1, 2, or 3")
     if min_count < 1:
@@ -89,22 +89,21 @@ def _frequency_levels(df: DataFrame, basket_col: str, item_col: str,
     # in the semi-join AND the output union; pruned under both the pair
     # and triple explodes): without lineage truncation each reference
     # re-evaluates the whole upstream — the plan for levels 1-3 scanned
-    # the source 18 times (measured, sf0.1). localCheckpoint
-    # (lazy, ContextCleaner-reclaimed — the dedup-module convention)
-    # caps each subtree at one evaluation; sizes are bounded by the
-    # distinct pair set and the frequent-item tables.
+    # the source 18 times (measured, sf0.1). A cut caps each subtree
+    # at one evaluation; sizes are bounded by the distinct pair set
+    # and the frequent-item tables.
     n_baskets_df = df.select(basket_col).distinct()
     exploded = (df.select(basket_col, item_col)
                 .where(F.col(item_col).isNotNull())
                 .distinct())
     if max_len > 1:
-        exploded = exploded.localCheckpoint(eager=False)
+        exploded = cut(exploded)
     f1 = (exploded.groupBy(item_col)
           .agg(F.count(F.lit(1)).alias("support"))
           .where(F.col("support") >= min_count))
     if max_len == 1:
         return f1, None, None, n_baskets_df
-    f1 = f1.localCheckpoint(eager=False)
+    f1 = cut(f1)
     pruned = exploded.join(f1.select(item_col), item_col, "semi")
     if max_len == 3:
         # only the triple level re-reads pruned (the pair explode AND
@@ -113,23 +112,20 @@ def _frequency_levels(df: DataFrame, basket_col: str, item_col: str,
         # full materialization for zero reuse (the smooth_scores
         # lesson). Its own inputs are already checkpointed, so the
         # uncut plan is two ExistingRDD reads deep.
-        pruned = pruned.localCheckpoint(eager=False)
+        pruned = cut(pruned)
     arrs = _guarded_arrays(pruned, basket_col, item_col, max_basket_items)
     f2 = (arrs.select(F.explode(_pairs_hof(F.col("__arr"))).alias("__p"))
           .groupBy(F.col("__p.a").alias("item_a"),
                    F.col("__p.b").alias("item_b"))
           .agg(F.count(F.lit(1)).alias("support"))
           .where(F.col("support") >= min_count))
-    # f2 gets a cut only when something downstream reads it twice: the
-    # triple level (member prune + output union) or association_rules
-    # (both rule directions — it passes f2_reused=True). A plain
-    # frequent_itemsets(max_len=2) consumes f2 exactly once, and a cut
-    # there pays a full materialization for zero reuse (the same
-    # single-consumer rule applied to `pruned` above).
-    if max_len == 3 or f2_reused:
-        f2 = f2.localCheckpoint(eager=False)
     if max_len == 2:
+        # a plain frequent_itemsets(max_len=2) consumes f2 exactly
+        # once, and a cut there pays a full materialization for zero
+        # reuse (the same single-consumer rule applied to `pruned`)
         return f1, f2, None, n_baskets_df
+    # the triple level reads f2 twice (member prune + output union)
+    f2 = cut(f2)
     # prune to F2 participants before the cubic explode (an actual
     # frequent triple has every sub-pair frequent, so its members all
     # appear in F2 — nothing is lost)
@@ -178,8 +174,9 @@ def association_rules(df: DataFrame, basket_col: str = "basket_id",
     consequent, support, antecedent_support, consequent_support,
     confidence, lift)."""
     f1, f2, _, baskets = _frequency_levels(
-        df, basket_col, item_col, min_count, 2, max_basket_items,
-        f2_reused=True)
+        df, basket_col, item_col, min_count, 2, max_basket_items)
+    # both rule directions read f2: cut it so the pair aggregate runs once
+    f2 = cut(f2)
     # basket count as a broadcast one-row cross join, not a blocking
     # .count() action: the count rides the same job as the rules plan
     # (one fewer full pass; the literal it replaced was the same double)

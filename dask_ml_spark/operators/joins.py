@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import cut
+
 
 def _numeric(col: "F.Column", dtype) -> "F.Column":
     """Monotone numeric view of a time-ish column: seconds for
@@ -88,11 +90,10 @@ def asof_join(left: DataFrame, right: DataFrame, on: str = "ts",
     if not by_cols:
         # keyless: bucket the time axis so the carry windows
         # parallelize; cross-bucket state rides the tiny bucket table.
-        # localCheckpoint: this path consumes u up to 4 times (the
-        # eager quantile pass, the carried pipeline, and one carry
-        # aggregate per direction) — materialize once, let the
-        # ContextCleaner reclaim it
-        u = u.localCheckpoint(eager=False)
+        # cut: this path consumes u up to 4 times (the eager quantile
+        # pass, the carried pipeline, and one carry aggregate per
+        # direction)
+        u = cut(u)
         spark = left.sparkSession
         n_target = max(int(spark.sparkContext.defaultParallelism), 16)
         probs = [i / n_target for i in range(1, n_target)]

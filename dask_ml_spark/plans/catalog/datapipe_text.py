@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from dask_ml_spark.datapipe import dedup as DD
 from dask_ml_spark.datapipe import text_stats as TS
+from dask_ml_spark.utils import cut
 from ._shared import (
     SQL_KNN_GRAPH_TOPK,
     TOKEN_RE_SQL,
@@ -378,12 +379,11 @@ def q_ppmi_topk(spark, sf_dir):
                                                     ppmi_scores)
 
     docs = _t(spark, sf_dir, "documents")
-    # lazy cut: the top-50 selection AND ppmi's four internal readers
-    # share one evaluation of the count pipeline (r14 — the uncut plan
-    # re-tokenized the corpus per reference; ppmi_scores' own guarded
-    # cut is skipped because this frame is already a checkpoint scan)
-    cooc = cooccurrence_counts(docs, window=2, vocab_size=100) \
-        .localCheckpoint(eager=False)
+    # the top-50 selection AND ppmi's four internal readers share one
+    # evaluation of the count pipeline (r14 — the uncut plan
+    # re-tokenized the corpus per reference; ppmi_scores' own cut is
+    # then a no-op on this already-cut frame)
+    cooc = cut(cooccurrence_counts(docs, window=2, vocab_size=100))
     top = cooc.orderBy(F.desc("n"), F.asc("w1"), F.asc("w2")).limit(50)
     return (top.join(ppmi_scores(cooc), ["w1", "w2"])
             .select("w1", "w2", "n", "ppmi"))
@@ -403,8 +403,7 @@ def q_collocations_logdice_topk(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     # same shared-evaluation cut as q_ppmi_topk
-    cooc = cooccurrence_counts(docs, window=2, vocab_size=100) \
-        .localCheckpoint(eager=False)
+    cooc = cut(cooccurrence_counts(docs, window=2, vocab_size=100))
     top = cooc.orderBy(F.desc("n"), F.asc("w1"), F.asc("w2")).limit(50)
     return (top.join(logdice_scores(cooc), ["w1", "w2"])
             .select("w1", "w2", "n", "logdice"))

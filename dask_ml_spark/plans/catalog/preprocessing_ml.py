@@ -10,6 +10,7 @@ import math
 from pyspark.sql import functions as F
 from dask_ml_spark.datapipe import dedup as DD
 from dask_ml_spark.datapipe import text_stats as TS
+from dask_ml_spark.utils import cut
 from ._shared import LINEITEM_FEATS, TOKEN_RE_SQL, _dsum, _sql_lang_score, _t  # noqa: F401
 
 def _dsum_wide(col):
@@ -1871,7 +1872,7 @@ def q_knn_classifier_eval(spark, sf_dir):
     # both heads consume the SAME 5 euclidean neighbors (the query's
     # contract) — search once, aggregate twice (r13 opt; lazy
     # checkpoint so the scan-and-rank runs a single time)
-    nn = clf.kneighbors(test, "vec_id").localCheckpoint(eager=False)
+    nn = cut(clf.kneighbors(test, "vec_id"))
     p = clf.predict(test, "vec_id", neighbors=nn)
     m = reg.predict(test, "vec_id", output_col="knn_mean", neighbors=nn)
     return (p.join(m, "vec_id")

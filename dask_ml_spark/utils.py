@@ -7,9 +7,12 @@ authoritative, so the equivalents here are thin.
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+import logging
+import re
 
 import numpy as np
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -23,6 +26,8 @@ NUMERIC_SPARK_TYPES = (
     T.DoubleType,
     T.DecimalType,
 )
+
+logger = logging.getLogger(__name__)
 
 
 def is_numeric_field(field: T.StructField) -> bool:
@@ -110,30 +115,6 @@ def resolve_feature_columns(df: DataFrame, columns=None) -> list[str]:
     return list(columns)
 
 
-def vector_struct(cols: Sequence[str]):
-    """An array<double> expression packing feature columns (JVM-side)."""
-    return F.array(*[F.col(c).cast("double") for c in cols])
-
-
-def check_matching_columns(df_a: DataFrame, df_b: DataFrame, cols: Iterable[str]) -> None:
-    """Analog of check_matching_blocks (reference dask_ml/utils.py:248-279):
-    with a single DataFrame holding X and y, alignment is structural; this
-    only checks that two frames share the named columns."""
-    for c in cols:
-        if c not in df_a.columns or c not in df_b.columns:
-            raise ValueError(f"Column {c!r} missing from one of the frames")
-
-
-def infer_output_fields(model, n_features: int, method: str = "predict") -> np.dtype:
-    """Meta inference: run ``model.<method>`` on a 1-row dummy to learn the
-    output dtype/shape (reference dask_ml/wrappers.py:642-695). Used to
-    declare pandas-UDF return schemas."""
-    dummy = np.zeros((1, n_features), dtype="float64")
-    out = getattr(model, method)(dummy)
-    out = np.asarray(out)
-    return out.dtype, out.shape[1:] if out.ndim > 1 else ()
-
-
 def numpy_dtype_to_spark(dt: np.dtype) -> T.DataType:
     dt = np.dtype(dt)
     if dt.kind == "f":
@@ -143,6 +124,32 @@ def numpy_dtype_to_spark(dt: np.dtype) -> T.DataType:
     if dt.kind == "b":
         return T.BooleanType()
     return T.StringType()
+
+
+def cut(df: DataFrame) -> DataFrame:
+    """Truncate ``df``'s lineage so its consumers share one evaluation.
+
+    The library's one lineage-cut rule: a lazy
+    ``localCheckpoint(eager=False)``, not ``persist``. The blocks
+    materialize inside the first job that reads them (no extra
+    build-time job); the ContextCleaner reclaims them once the frame
+    is dropped, where a library persist leaks a CacheManager entry
+    until someone unpersists; the lineage is truncated, so an executor
+    lost after materialization fails the job instead of recomputing
+    the partition. A bare materialized-RDD scan (an earlier cut,
+    ``createDataFrame`` of Python rows) is cheap and deterministic to
+    re-read and comes back unchanged, so cut(cut(x)) is one cut.
+    """
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        return df
+    return df.localCheckpoint(eager=False)
+
+
+# a shuffle exchange, live ("Exchange hashpartitioning(...)") or reused
+# ("ReusedExchange [...], Exchange ...") — not BroadcastExchange
+_SHUFFLE_EXCHANGE = re.compile(r"\bExchange [A-Za-z]")
+_PLAN_ERRORS = (Py4JJavaError, CapturedException)
 
 
 def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -162,17 +169,22 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
         min_parts = df.sparkSession.sparkContext.defaultParallelism
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:
+    except _PLAN_ERRORS as e:
+        logger.warning("ensure_min_partitions: no physical plan (%s); "
+                       "probing the partition count directly", e)
         plan = ""
-    if "Exchange" in plan:
+    if _SHUFFLE_EXCHANGE.search(plan):
         # under AQE, probing df.rdd FINALIZES the plan: every query
         # stage below the probe point (shuffle maps, broadcasts, cache
         # materializations) runs as REAL jobs whose output is thrown
         # away when the caller extends or persists the plan afterwards
         # (measured: 1-2 discarded jobs per call on CV-fold-cache
-        # shapes). A frame behind an exchange is already
+        # shapes). A frame behind a shuffle is already
         # shuffle-partitions wide — scale-governed, not a 1-3-split
         # parquet scan — so skip both the probe and the repartition.
+        # A broadcast exchange does not set the frame's width: the
+        # streamed side keeps its scan splits, so it is still probed
+        # (the probe runs the small broadcast side's job).
         # (executedPlan() is pure planning, no jobs, and the
         # QueryExecution is cached for the caller's eventual action.)
         return df
@@ -204,7 +216,9 @@ def right_size_cv_cache(df: DataFrame, n_jobs: int,
     try:
         size = int(df._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
-    except Exception:
+    except _PLAN_ERRORS as e:
+        logger.warning("right_size_cv_cache: no plan statistics (%s); "
+                       "keeping the partition floor only", e)
         size = -1
     if size <= 0 or size > (1 << 42):  # unknown / absurd estimate
         return ensure_min_partitions(df)
@@ -216,16 +230,6 @@ def right_size_cv_cache(df: DataFrame, n_jobs: int,
     if target < current:
         return df.repartition(target)
     return ensure_min_partitions(df, target)
-
-
-def add_row_index(df: DataFrame, name: str = "__row_id__") -> DataFrame:
-    """Stable unique row id without a global sort.
-
-    monotonically_increasing_id is partition-local-monotonic which is all
-    the engine needs (join keys, fold assignment); a global contiguous
-    index would force a full pass + shuffle and does not scale.
-    """
-    return df.withColumn(name, F.monotonically_increasing_id())
 
 
 def zip_with_index(df: DataFrame, order_cols, id_col: str = "index",

@@ -386,20 +386,24 @@ def test_duplicate_clusters_chain_and_clique(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_duplicate_clusters_null_ids_survive_local_finish(spark):
+@pytest.mark.parametrize("local_edges", [None, 0],
+                         ids=["local_finish", "distributed"])
+def test_duplicate_clusters_null_ids_survive_local_finish(spark, local_edges):
     """A NULL id in a long-typed pair column must not crash the hybrid
-    local finish (int(NaN) raised in union-find before the r14 fix);
-    the non-null components still resolve to min-id clusters."""
+    local finish (int(NaN) raised in union-find before the r14 fix),
+    and both sides of the local_edges gate return the SAME output: the
+    NULL id gets no row, its partner 7 is its own singleton cluster,
+    and the non-null components resolve to min-id clusters."""
     from dask_ml_spark.datapipe.dedup import duplicate_clusters
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (None, 7), (10, 11)],
         "id_a long, id_b long")
-    cl = duplicate_clusters(pairs).toPandas()
-    got = {int(n): int(c) for n, c in zip(cl["node"], cl["cluster"])
-           if n == n and n is not None}
-    for node, want in {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}.items():
-        assert got[node] == want
+    kw = {} if local_edges is None else {"local_edges": local_edges}
+    rows = duplicate_clusters(pairs, **kw).collect()
+    assert len(rows) == 6
+    assert {(r.node, r.cluster) for r in rows} == {
+        (1, 1), (2, 1), (3, 1), (7, 7), (10, 10), (11, 10)}
 
 
 def test_dedup_keep_representatives(spark):

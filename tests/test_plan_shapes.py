@@ -592,15 +592,16 @@ def test_frequency_levels_checkpoint_pruned_only_for_triples(spark, monkeypatch)
     there pays build-time planning plus a full materialization of the
     table for zero reuse. Same rule for f2 (r14): a plain
     frequent_itemsets(max_len=2) consumes f2 once (no cut); only
-    association_rules (f2_reused=True — both rule directions) or the
-    triple level justify cutting it. Pin the cut count per shape:
-    max_len=2 cuts exploded/f1 (2), +f2 when f2_reused (3), max_len=3
-    cuts exploded/f1/pruned/f2 (4)."""
+    association_rules (both rule directions — it cuts f2 itself) or
+    the triple level justify cutting it. Pin the cut count per shape:
+    max_len=2 cuts exploded/f1 (2), association_rules adds f2 (3),
+    max_len=3 cuts exploded/f1/pruned/f2 (4)."""
     # patch the concrete class: in Spark 4 pyspark.sql.DataFrame is the
     # abstract facade and instance lookups resolve on the classic class
     from pyspark.sql.classic.dataframe import DataFrame
 
-    from dask_ml_spark.operators.frequent_patterns import _frequency_levels
+    from dask_ml_spark.operators.frequent_patterns import (
+        _frequency_levels, association_rules)
 
     df = spark.createDataFrame(
         [(1, "a"), (1, "b"), (1, "c"), (2, "a"), (2, "b"), (3, "a")],
@@ -616,11 +617,11 @@ def test_frequency_levels_checkpoint_pruned_only_for_triples(spark, monkeypatch)
     _frequency_levels(df, "basket_id", "item", 2, 2, 300)
     n_pairs = len(calls)
     calls.clear()
-    _frequency_levels(df, "basket_id", "item", 2, 2, 300, f2_reused=True)
-    n_pairs_reused = len(calls)
+    association_rules(df, min_count=2)
+    n_rules = len(calls)
     calls.clear()
     _frequency_levels(df, "basket_id", "item", 2, 3, 300)
     n_triples = len(calls)
     assert n_pairs == 2
-    assert n_pairs_reused == 3
+    assert n_rules == 3
     assert n_triples == 4

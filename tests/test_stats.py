@@ -1474,6 +1474,27 @@ def test_spearman_driver_and_distributed_paths_agree(spark):
     assert abs(fast["p_value"] - slow["p_value"]) < 1e-12
 
 
+def test_spearman_distributed_ranks_cut_once(spark):
+    """The distributed rank pass (max_driver_rows=0) is cut before it
+    splits into the two per-column rank frames: the final plan reads
+    the cut (an ExistingRDD scan — the input here is a Range, not an
+    RDD) and never re-runs the grouped-cumsum MapInPandas per column."""
+    from dask_ml_spark.functions.stats import spearman_rho
+
+    df = spark.range(250).select(
+        (F.col("id") % 30).cast("double").alias("a"),
+        ((F.col("id") % 30) + (F.col("id") * 7 % 11)).cast("double")
+        .alias("b"))
+    out = spearman_rho(df, "a", "b", max_driver_rows=0)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan
+    assert "MapInPandas" not in plan, plan
+    got = out.collect()[0]
+    want = spearman_rho(df, "a", "b").collect()[0]
+    assert got["n"] == want["n"] == 250
+    assert abs(got["rho"] - want["rho"]) < 1e-12
+
+
 def test_stats_plans_have_no_global_window(spark):
     """The scale contract: no keyless Window (single-task sort) — the
     cumulative pieces run through the two-phase prefix sum

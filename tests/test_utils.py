@@ -6,6 +6,7 @@ import pytest
 from dask_ml_spark.utils import (
     assert_estimator_equal,
     check_random_state,
+    cut,
     ensure_min_partitions,
     handle_zeros_in_scale,
 )
@@ -47,6 +48,39 @@ def test_ensure_min_partitions_noop_when_enough(spark):
     assert ensure_min_partitions(df).rdd.getNumPartitions() == 64
     small = spark.range(10).coalesce(1)
     assert ensure_min_partitions(small).rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    # a broadcast exchange does not widen the streamed side: a frame
+    # whose only exchange is a BroadcastExchange is still spread
+    from pyspark.sql import functions as F
+
+    dim = spark.range(5).withColumnRenamed("id", "k")
+    bcast = small.join(F.broadcast(dim), small.id == dim.k)
+    plan = bcast._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan and "Exchange hash" not in plan
+    assert ensure_min_partitions(bcast).rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
+def test_cut_truncates_lineage_once(spark, monkeypatch):
+    """cut() turns a derived frame into a bare checkpoint scan, and is
+    a no-op on a frame that already is one: cut(cut(x)) is one cut."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+    orig = DataFrame.localCheckpoint
+
+    def counting(self, eager=True):
+        calls.append(eager)
+        return orig(self, eager=eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    x = spark.range(10).select((F.col("id") * 2).alias("v"))
+    once = cut(x)
+    assert calls == [False]
+    assert (once._jdf.queryExecution().analyzed().getClass().getSimpleName()
+            == "LogicalRDD")
+    assert cut(once) is once
+    assert calls == [False]
+    assert sorted(r.v for r in once.collect()) == list(range(0, 20, 2))
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
